@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -121,6 +122,20 @@ def cpu_canary_mt() -> float:
     return round(MT_CANARY_PROCS * MT_CANARY_ITERS / dt, 1)
 
 
+def master_cpus(sc) -> int:
+    """Cores of a resolved Spark master: N of ``local[N]`` / ``local[N,F]``,
+    every core for ``local[*]``, 1 for bare ``local``; any other master
+    reports its default parallelism."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", sc.master)
+    if m is None:
+        return sc.defaultParallelism
+    if m.group(1) is None:
+        return 1
+    if m.group(1) == "*":
+        return os.cpu_count() or 1
+    return int(m.group(1))
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(os.path.normpath(sf_dir)).removeprefix("sf") or 0)
@@ -140,10 +155,10 @@ def main() -> int:
     # "suspect_cpus_ignored" from ≈1 timing ratios (which is also what a
     # constant-bound suite at this SF looks like). Additions-only: the
     # timing methodology and every existing field are unchanged.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = int(cpus_env or 0) or os.cpu_count() or 4
+    # the count the session actually runs with, read back from its master
+    # (not a re-read of the env var the session factory consumed)
     scaling_evidence = {
-        "cpus": cpus,
+        "cpus": master_cpus(spark.sparkContext),
         "spark_master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),

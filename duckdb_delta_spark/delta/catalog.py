@@ -6,9 +6,9 @@ incremental refresh (reference: src/delta_extension.cpp:21-79,
 src/storage/delta_catalog.cpp:25-119, delta_schema_entry.cpp:108-221).
 
 ``attach`` registers a Spark temp view so ``spark.sql`` sees the table; an
-unpinned entry re-resolves HEAD on each ``table()`` call, reusing the cached
-snapshot as the incremental base (only the new log tail is read — the
-analogue of delta_multi_file_list.cpp:706-718).
+unpinned entry re-resolves HEAD on each ``table()`` call through the shared
+snapshot resolver (delta/snapcache.py): only the new log tail is read — the
+analogue of delta_multi_file_list.cpp:706-718.
 """
 
 from __future__ import annotations
@@ -64,9 +64,10 @@ class DeltaCatalog:
         if version is not None:
             if entry.table.version == version:
                 return entry.table
-            # backward moves rebuild; forward moves reuse the cached snapshot
-            base = entry.table.snapshot if version > entry.table.version else None
-            return DeltaTable(entry.path, version=version, snapshot=base)
+            # the shared resolver picks the replay start: the entry's own
+            # snapshot when it precedes the target, else a cached state
+            return DeltaTable(entry.path, version=version,
+                              snapshot=entry.table.snapshot)
         if entry.pinned:
             return entry.table
         refreshed = entry.table.refreshed()

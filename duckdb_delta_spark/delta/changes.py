@@ -186,21 +186,24 @@ def _walk_changes(
     derives the row changes, and a metadata-only boundary commit is
     known row-free by construction, so no probe job is ever issued
     for it."""
-    end = log.resolve_version(ending_version)
+    # one directory listing for the whole walk — commit_timestamp and
+    # every per-commit snapshot step would otherwise re-list per version,
+    # making CDF O(versions × listdir)
+    listing = log.list_log_files()
+    commit_paths = listing.commits
+    end = log.resolve_version(ending_version, listing)
     if starting_version > end:
         raise ValueError(f"starting_version {starting_version} > end {end}")
     from duckdb_delta_spark.delta.errors import SchemaError
+    from duckdb_delta_spark.delta.snapcache import resolve_snapshot
 
-    # one directory listing for the whole walk — commit_timestamp would
-    # otherwise re-list per version, making CDF O(versions × listdir)
-    commit_paths, _ = log.list_log_files()
     parts: list[DataFrame] = []
     if starting_version < 0:
         # pre-table baseline (timestamp bound before the first commit):
         # an empty snapshot so even version 0's changes are included
         snap = Snapshot(log, -1)
     else:
-        snap = Snapshot.build(log, starting_version)
+        snap = resolve_snapshot(log, starting_version)
     # every distinct schema observed in the current segment, oldest
     # first — each is validated against the segment's END schema at
     # finalize (rename/drop inside a segment must raise, not null-fill;
@@ -269,7 +272,8 @@ def _walk_changes(
         # the ICT.
         actions = log.read_commit(v)
         prev = snap
-        snap = Snapshot.build(log, v, base=prev, actions=actions)
+        snap = Snapshot.build(log, v, base=prev, actions=actions,
+                              listing=listing)
         schema_changed = not schema_versions or (
             snap.schema is not schema_versions[-1][1]
             and snap.schema != schema_versions[-1][1])

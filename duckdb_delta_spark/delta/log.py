@@ -122,9 +122,11 @@ class DeltaLog:
 
     # ---------- listing ----------
 
-    def list_log_files(self) -> tuple[dict[int, str], dict[int, list[str]]]:
-        """Return ``(commits, checkpoints)``: version → json path, and
-        version → checkpoint part paths (sorted)."""
+    def list_log_files(self) -> "LogListing":
+        """One pass over ``_delta_log``: ``(commits, checkpoints)`` —
+        version → json path, and version → checkpoint part paths
+        (sorted) — with the minor-compacted segments riding along as
+        ``.segments`` so a snapshot build never lists twice."""
         commits: dict[int, str] = {}
         checkpoints: dict[int, list[str]] = {}
         if self.log_tail is not None:
@@ -164,23 +166,31 @@ class DeltaLog:
                         ]
                         if v2:
                             checkpoints[v] = [sorted(v2)[-1]]
-            return commits, checkpoints
+            return LogListing(commits, checkpoints, {})
         raw: dict[int, list[str]] = {}
+        segments: dict[int, tuple[int, str]] = {}
+        prefix = self.log_path + os.sep
         for name in os.listdir(self.log_path):
-            m = _COMMIT_RE.match(name)
-            if m:
-                commits[int(m.group(1))] = os.path.join(self.log_path, name)
-                continue
-            m = _CHECKPOINT_RE.match(name) or _CHECKPOINT_V2_RE.match(name)
-            if m:
-                raw.setdefault(int(m.group(1)), []).append(
-                    os.path.join(self.log_path, name)
-                )
+            # commit JSONs are nearly every entry of a long log: a
+            # fixed-width string test instead of a regex per name
+            if len(name) == 25 and name.endswith(".json") and name[:20].isdigit():
+                commits[int(name[:20])] = prefix + name
+            elif "checkpoint" in name:
+                m = _CHECKPOINT_RE.match(name) or _CHECKPOINT_V2_RE.match(name)
+                if m:
+                    raw.setdefault(int(m.group(1)), []).append(prefix + name)
+            elif name.endswith(".compacted.json"):
+                m = _COMPACTED_RE.match(name)
+                if m:
+                    lo, hi = int(m.group(1)), int(m.group(2))
+                    cur = segments.get(lo)
+                    if cur is None or hi > cur[0]:
+                        segments[lo] = (hi, prefix + name)
         for v, parts in raw.items():
             usable = self._validate_checkpoint_parts(v, parts)
             if usable:
                 checkpoints[v] = usable
-        return commits, checkpoints
+        return LogListing(commits, checkpoints, segments)
 
     @staticmethod
     def _validate_checkpoint_parts(version: int, paths: list[str]) -> list[str] | None:
@@ -211,15 +221,11 @@ class DeltaLog:
             return [v2[-1]]  # any one manifest is self-complete
         return None
 
-    def latest_version(self) -> int:
-        commits, checkpoints = self.list_log_files()
-        versions = set(commits) | set(checkpoints)
-        # a minor-compacted segment may be the only surviving record of
-        # its range (the per-commit JSONs can be cleaned under it)
-        versions |= {hi for hi, _ in self.list_compacted_segments().values()}
-        if not versions:
+    def latest_version(self, listing: "LogListing | None" = None) -> int:
+        listing = listing if listing is not None else self.list_log_files()
+        if listing.head is None:
             raise MalformedLogError(f"empty _delta_log at {self.table_path}")
-        return max(versions)
+        return listing.head
 
     def last_checkpoint_hint(self) -> dict | None:
         """Parse ``_last_checkpoint`` (a pointer so clients can avoid a full
@@ -240,21 +246,7 @@ class DeltaLog:
         ``<lo>.<hi>.compacted.json``): lo → (hi, path), widest hi per lo.
         Segments substitute for the per-commit JSONs of their range
         during replay — the individual commits may even be deleted."""
-        out: dict[int, tuple[int, str]] = {}
-        if self.log_tail is not None:
-            return out
-        try:
-            names = os.listdir(self.log_path)
-        except OSError:
-            return out
-        for name in names:
-            m = _COMPACTED_RE.match(name)
-            if m:
-                lo, hi = int(m.group(1)), int(m.group(2))
-                cur = out.get(lo)
-                if cur is None or hi > cur[0]:
-                    out[lo] = (hi, os.path.join(self.log_path, name))
-        return out
+        return self.list_log_files().segments
 
     @staticmethod
     def _parse_action_text(text: str) -> list[dict] | None:
@@ -655,8 +647,9 @@ class DeltaLog:
             )
         return best
 
-    def resolve_version(self, version: int | None) -> int:
-        latest = self.latest_version()
+    def resolve_version(self, version: int | None,
+                        listing: "LogListing | None" = None) -> int:
+        latest = self.latest_version(listing)
         if version is None:
             return latest
         if version < 0 or version > latest:
@@ -664,6 +657,33 @@ class DeltaLog:
                 f"version {version} not in [0, {latest}] at {self.table_path}"
             )
         return version
+
+
+class LogListing(tuple):
+    """One ``_delta_log`` listing. Unpacks as ``(commits, checkpoints)``
+    like it always has; ``segments`` (lo → (hi, path)) and ``head`` ride
+    along so one directory pass serves a whole snapshot build."""
+
+    def __new__(cls, commits: dict[int, str],
+                checkpoints: dict[int, list[str]],
+                segments: dict[int, tuple[int, str]]):
+        self = super().__new__(cls, (commits, checkpoints))
+        self.segments = segments
+        # newest version any file vouches for — a minor-compacted segment
+        # may be the only surviving record of its range (the per-commit
+        # JSONs can be cleaned under it); None for an empty log
+        tops = [max(d) for d in (commits, checkpoints) if d]
+        tops += [hi for hi, _ in segments.values()]
+        self.head: int | None = max(tops) if tops else None
+        return self
+
+    @property
+    def commits(self) -> dict[int, str]:
+        return self[0]
+
+    @property
+    def checkpoints(self) -> dict[int, list[str]]:
+        return self[1]
 
 
 def _normalize_maps(value):

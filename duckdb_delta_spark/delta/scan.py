@@ -42,9 +42,15 @@ from pyspark.sql import types as T
 
 from duckdb_delta_spark.localrel import local_df as _local_df
 from duckdb_delta_spark.delta.snapshot import AddFile, Snapshot
+from duckdb_delta_spark.operators.exprlit import sql_ident, sql_literal
 
 FILE_COL = "__delta_file_path"
 ROW_COL = "__delta_row_index"
+
+
+def _quote(name: str) -> str:
+    """Backquoted single-part SQL identifier (a dot stays part of the name)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def pv_string_to_col(raw, typ):
@@ -89,6 +95,36 @@ class Pred:
 
     def __repr__(self) -> str:
         return f"Pred({self.column} {self.op} {self.value!r})"
+
+    def to_sql(self) -> str | None:
+        """This conjunct as one SQL expression equal to
+        :meth:`to_spark_column` (same ``Literal`` types), or None when a
+        name or literal has no exact rendering — the Column API is then
+        the only exact form. One ``filter`` string is one Py4J round trip;
+        the Column API costs several per literal."""
+        c = sql_ident(self.column)
+        if c is None:
+            return None
+        if self.op == "is null":
+            return f"{c} IS NULL"
+        if self.op == "is not null":
+            return f"{c} IS NOT NULL"
+        if self.op == "in":
+            if not isinstance(self.value, (list, tuple, set, frozenset)):
+                return None
+            vals = [sql_literal(v) for v in self.value]
+            if not vals or None in vals:
+                return None
+            return f"{c} IN ({', '.join(vals)})"
+        lit = sql_literal(self.value)
+        if lit is None:
+            return None
+        if self.op == "like":
+            return f"{c} LIKE {lit}" if isinstance(self.value, str) else None
+        if self.op == "not like":
+            return (f"NOT ({c} LIKE {lit})" if isinstance(self.value, str)
+                    else None)
+        return f"{c} {self.op} {lit}"
 
     def to_spark_column(self) -> F.Column:
         c = F.col(self.column)
@@ -139,6 +175,17 @@ class OrPred:
             "(" + " & ".join(repr(q) for q in br) + ")"
             for br in self.branches
         ) + ")"
+
+    def to_sql(self) -> str | None:
+        """The disjunction as one SQL expression, or None when any
+        conjunct has no exact rendering (see :meth:`Pred.to_sql`)."""
+        branches = []
+        for br in self.branches:
+            conj = [q.to_sql() for q in br]
+            if None in conj:
+                return None
+            branches.append("(" + " AND ".join(f"({c})" for c in conj) + ")")
+        return " OR ".join(branches)
 
     def to_spark_column(self) -> F.Column:
         import functools
@@ -964,6 +1011,7 @@ class DeltaScanBuilder:
 
         has_dv = any(f.deletion_vector for f in files)
         need_file_col = bool(pcols) or has_dv or self._virtual or self._row_ids
+        has_row_col = has_dv or self._virtual or self._row_ids
 
         if not files:
             extra = []
@@ -1039,24 +1087,37 @@ class DeltaScanBuilder:
         reader = spark.read.schema(phys_schema)
         df = reader.parquet(*paths)
 
-        sel = []
-        for logical, phys, t, _ in fields:
-            col = F.col(phys)
-            if mode in ("name", "id") and physical_type(t) != t:
-                # physical→logical rename of NESTED fields: Catalyst
-                # struct casts are positional, so a cast to the logical
-                # shape IS the rename, executed codegen-side (no UDF)
-                col = col.cast(nullable_type(t))
-            sel.append(col.alias(logical))
+        # (source, alias) of the metadata columns the later steps join on
+        meta = []
         if need_file_col:
-            sel.append(F.col("_metadata.file_path").alias(FILE_COL))
-        if has_dv or self._virtual or self._row_ids:
-            sel.append(F.col("_metadata.row_index").alias(ROW_COL))
+            meta.append(("_metadata.file_path", FILE_COL))
+        if has_row_col:
+            meta.append(("_metadata.row_index", ROW_COL))
         if mat_id:
-            sel.append(F.col(f"`{mat_id}`").alias("__mat_row_id"))
+            meta.append((_quote(mat_id), "__mat_row_id"))
         if mat_ver:
-            sel.append(F.col(f"`{mat_ver}`").alias("__mat_rcv"))
-        df = df.select(*sel)
+            meta.append((_quote(mat_ver), "__mat_rcv"))
+        nested = mode in ("name", "id") and any(
+            physical_type(t) != t for _, _, t, _ in fields)
+        if nested:
+            # physical→logical rename of NESTED fields: Catalyst struct
+            # casts are positional, so a cast to the logical shape IS the
+            # rename, executed codegen-side (no UDF)
+            sel = []
+            for logical, phys, t, _ in fields:
+                col = F.col(_quote(phys))
+                if physical_type(t) != t:
+                    col = col.cast(nullable_type(t))
+                sel.append(col.alias(logical))
+            df = df.select(*sel, *(F.col(src).alias(a) for src, a in meta))
+        elif meta or any(phys != logical for logical, phys, _, _ in fields):
+            # one SQL select list: a round trip per item, where F.col +
+            # alias costs over a dozen
+            df = df.selectExpr(
+                *(f"{_quote(phys)} AS {_quote(logical)}"
+                  for logical, phys, _, _ in fields),
+                *(f"{src} AS {_quote(a)}" for src, a in meta))
+        # else: the read schema already IS the output — no projection
 
         if pcols:
             df = self._inject_partition_values(df, files, pcols, ptypes)
@@ -1126,23 +1187,35 @@ class DeltaScanBuilder:
                 .join(F.broadcast(fmap), on=FILE_COL, how="left")
             )
 
-        keep_row_col = self._virtual
-        drop = [c for c in (FILE_COL, ROW_COL) if c in df.columns and not keep_row_col]
-        if drop:
-            df = df.drop(*drop)
+        # the metadata columns are known here — asking df.columns would
+        # cost a schema round trip
+        if not self._virtual:
+            drop = [c for c, on in ((FILE_COL, need_file_col),
+                                    (ROW_COL, has_row_col)) if on]
+            if drop:
+                df = df.drop(*drop)
 
         # exact row-level filtering on top of file pruning (pruning is only
         # conservative); Catalyst pushes these to parquet row groups.
-        for p in self._preds:
-            df = df.filter(p.to_spark_column())
-        # dynamic preds are hints implied by a downstream join — row-level
+        # Dynamic preds are hints implied by a downstream join — row-level
         # re-application is safe and reaches parquet row groups, but only
         # under modes that enable dynamic pushdown (observability parity)
+        preds = list(self._preds)
         if self.pushdown in ("all", "dynamic_only"):
-            for p in self._dyn_preds:
+            preds += self._dyn_preds
+        rendered = []
+        for p in preds:
+            sql = p.to_sql()
+            if sql is None:
                 df = df.filter(p.to_spark_column())
+            else:
+                rendered.append(f"({sql})")
+        if rendered:
+            df = df.filter(" AND ".join(rendered))
         if self._projection:
-            df = df.select(*self._projection)
+            cols = [sql_ident(c) for c in self._projection]
+            df = (df.selectExpr(*cols) if None not in cols
+                  else df.select(*self._projection))
         return df
 
     # ---------- helpers ----------

@@ -27,7 +27,7 @@ from duckdb_delta_spark.delta.errors import (
     SchemaError,
     UnsupportedFeatureError,
 )
-from duckdb_delta_spark.delta.log import DeltaLog
+from duckdb_delta_spark.delta.log import DeltaLog, LogListing
 
 #: reader features this engine implements; anything else in protocol.readerFeatures fails
 #: writer features this engine honors when committing; a table listing
@@ -175,8 +175,9 @@ class Snapshot:
         self._stats_manifest_built = False
         self._sorted_files: list[AddFile] | None = None
         self._partition_arrays: dict[str, object] = {}
-        #: version of the checkpoint replay started from (None = full
-        #: commit walk, or incremental build from a base snapshot)
+        #: version of the checkpoint this state's replay lineage started
+        #: from — an incremental build inherits its base's (None = a
+        #: commit walk from version 0)
         self.checkpoint_version: int | None = None
 
     # ---------- construction ----------
@@ -186,6 +187,7 @@ class Snapshot:
         cls, log: DeltaLog, version: int | None = None,
         base: "Snapshot | None" = None,
         actions: "list[dict] | None" = None,
+        listing: "LogListing | None" = None,
     ) -> "Snapshot":
         """Replay the log up to ``version`` (default HEAD).
 
@@ -199,8 +201,15 @@ class Snapshot:
         single-commit incremental refresh parse each commit exactly
         once instead of twice. Only consulted for the target version
         and never for a compaction-covered one.
+
+        ``listing``: a :meth:`DeltaLog.list_log_files` result the caller
+        already holds; otherwise the build lists ``_delta_log`` once.
+        Either way the build is a pure replay of the log — caching lives
+        in :mod:`duckdb_delta_spark.delta.snapcache`.
         """
-        target = log.resolve_version(version)
+        if listing is None:
+            listing = log.list_log_files()
+        target = log.resolve_version(version, listing)
         if base is not None and base.log.table_path == log.table_path and base.version <= target:
             snap = cls(log, target)
             snap.metadata = dict(base.metadata)
@@ -212,16 +221,17 @@ class Snapshot:
             snap.app_txn_updated = dict(base.app_txn_updated)
             snap.domain_metadata = dict(base.domain_metadata)
             snap.commit_timestamps = dict(base.commit_timestamps)
+            snap.checkpoint_version = base.checkpoint_version
             start = base.version + 1
         else:
             snap = cls(log, target)
             start = 0
-            ckpt_version = snap._maybe_apply_checkpoint(target)
+            ckpt_version = snap._maybe_apply_checkpoint(target, listing)
             snap.checkpoint_version = ckpt_version  # observability
             if ckpt_version is not None:
                 start = ckpt_version + 1
-        commits, _ = log.list_log_files()
-        segments = log.list_compacted_segments()
+        commits = listing.commits
+        segments = listing.segments
         v = start
         while v <= target:
             seg = segments.get(v)
@@ -274,8 +284,9 @@ class Snapshot:
         )
         return snap
 
-    def _maybe_apply_checkpoint(self, target: int) -> int | None:
-        commits, checkpoints = self.log.list_log_files()
+    def _maybe_apply_checkpoint(self, target: int,
+                                listing: "LogListing") -> int | None:
+        checkpoints = listing.checkpoints
         hint = self.log.last_checkpoint_hint()
         candidates = [v for v in checkpoints if v <= target]
         if not candidates:
@@ -608,7 +619,6 @@ class Snapshot:
         types across files, exotic layouts) — callers fall back to
         ``AddFile.parsed_stats``."""
         if not self._stats_manifest_built:
-            self._stats_manifest_built = True
             import io
 
             import pyarrow.json as pj
@@ -627,6 +637,9 @@ class Snapshot:
                         self._stats_manifest = tbl.combine_chunks()
                 except Exception:  # noqa: BLE001 - fallback path is exact
                     self._stats_manifest = None
+            # flagged only once the manifest is in place: a thread sharing
+            # this (cached) snapshot never sees "built" with no manifest
+            self._stats_manifest_built = True
         return self._stats_manifest
 
     def num_records_estimate(self) -> int | None:

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from duckdb_delta_spark.localrel import local_df as _local_df
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.scan import DeltaScanBuilder
+from duckdb_delta_spark.delta.snapcache import resolve_snapshot
 from duckdb_delta_spark.delta.snapshot import Snapshot
 from duckdb_delta_spark.delta.writer import DeltaWriter
 
@@ -55,11 +56,10 @@ class DeltaTable:
             if version is not None:
                 raise ValueError("pass either version or timestamp, not both")
             version = self.log.version_at_timestamp(_to_epoch_ms(timestamp))
-        if snapshot is not None and snapshot.version == self.log.resolve_version(version):
-            self.snapshot = snapshot
-        else:
-            # incremental forward refresh when a base snapshot is supplied
-            self.snapshot = Snapshot.build(self.log, version, base=snapshot)
+        # shared resolver: an unchanged HEAD is the cached snapshot, a
+        # newer one replays only the tail (``snapshot`` is one more
+        # candidate start), time travel starts from the nearest state
+        self.snapshot = resolve_snapshot(self.log, version, base=snapshot)
         self.version = self.snapshot.version
 
     # ---------- read ----------

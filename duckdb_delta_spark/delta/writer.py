@@ -46,6 +46,7 @@ from duckdb_delta_spark.delta.errors import (
     UnsupportedFeatureError,
 )
 from duckdb_delta_spark.delta.log import DeltaLog
+from duckdb_delta_spark.delta.snapcache import resolve_snapshot
 from duckdb_delta_spark.delta.snapshot import SUPPORTED_WRITER_FEATURES, Snapshot
 
 ENGINE_INFO = "duckdb-delta-spark/0.1"
@@ -284,7 +285,7 @@ class DeltaWriter:
         # pin table state at transaction start, like the reference
         # (delta_transaction.cpp:490-537): a commit that lands between
         # construction and our commit is a conflict, not silently absorbed
-        self._snapshot = Snapshot.build(self.log)
+        self._snapshot = resolve_snapshot(self.log)
 
     # ---------- table creation ----------
 
@@ -608,7 +609,7 @@ class DeltaWriter:
 
         src = os.path.abspath(src_path)
         dest = os.path.abspath(dest_path)
-        src_snap = Snapshot.build(DeltaLog(src))
+        src_snap = resolve_snapshot(DeltaLog(src))
         os.makedirs(os.path.join(dest, "_delta_log"), exist_ok=False)
         if not shallow:
             return DeltaWriter._deep_clone(spark, src, dest, src_snap)
@@ -1018,7 +1019,7 @@ class DeltaWriter:
                 self._commit(version, actions, snapshot)
                 # refresh the pinned snapshot incrementally (reads only the
                 # commit we just wrote) so sequential appends stay cheap
-                self._snapshot = Snapshot.build(self.log, base=snapshot)
+                self._snapshot = resolve_snapshot(self.log, base=snapshot)
                 self._maybe_auto_compact()
                 return version
             except CommitConflictError:
@@ -1026,7 +1027,7 @@ class DeltaWriter:
                 if attempt > max_retries:
                     self._rollback(moved)
                     raise
-                fresh = Snapshot.build(self.log, base=snapshot)
+                fresh = resolve_snapshot(self.log, base=snapshot)
                 if txn_app_id is not None and txn_expected_last is not None:
                     if fresh.transaction_version(txn_app_id) != txn_expected_last:
                         self._rollback(moved)
@@ -1101,7 +1102,7 @@ class DeltaWriter:
         Computed INCREMENTALLY (replays only this commit on the pinned
         snapshot, O(commit) not O(table)); never fails the durable commit."""
         try:
-            post = Snapshot.build(self.log, version, base=snap_before)
+            post = resolve_snapshot(self.log, version, base=snap_before)
             files = post.add_files()
             dvs = [f.deletion_vector for f in files if f.deletion_vector]
             crc = {
@@ -2057,7 +2058,7 @@ class DeltaWriter:
                 if attempt > 3:
                     self._rollback(undo)
                     raise
-                fresh = Snapshot.build(self.log, base=snap)
+                fresh = resolve_snapshot(self.log, base=snap)
                 try:
                     # full ConflictChecker bar (r16): beyond the touched
                     # files' DV identity, the racer must not have changed
@@ -2081,7 +2082,7 @@ class DeltaWriter:
             n_deleted=n_deleted,
             n_files=len(results),
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version, n_deleted
 
     def _by_uri(self, snap: Snapshot) -> dict:
@@ -2650,7 +2651,7 @@ class DeltaWriter:
                 if attempt > 3:
                     self._rollback(undo)
                     raise
-                fresh = Snapshot.build(self.log, base=snap)
+                fresh = resolve_snapshot(self.log, base=snap)
                 try:
                     self._revalidate_dml_retry(
                         snap, fresh, results, "UPDATE", condition=condition
@@ -2668,7 +2669,7 @@ class DeltaWriter:
             version=version,
             n_updated=n_updated,
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version, n_updated
 
     def merge(
@@ -3115,7 +3116,7 @@ class DeltaWriter:
                 if attempt > 3:
                     self._rollback(undo)
                     raise
-                fresh = Snapshot.build(self.log, base=snap)
+                fresh = resolve_snapshot(self.log, base=snap)
                 try:
                     self._revalidate_dml_retry(snap, fresh, results, "MERGE")
                 except Exception:
@@ -3132,7 +3133,7 @@ class DeltaWriter:
             n_matched=n_matched,
             n_inserted=n_inserted,
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version, n_matched, n_inserted
 
     # ---------- OVERWRITE (INSERT OVERWRITE / replaceWhere) ----------
@@ -3420,7 +3421,7 @@ class DeltaWriter:
                 if attempt > 3:
                     self._rollback(undo)
                     raise
-                fresh = Snapshot.build(self.log, base=snap)
+                fresh = resolve_snapshot(self.log, base=snap)
                 try:
                     if where is not None:
                         self._revalidate_dml_retry(
@@ -3444,7 +3445,7 @@ class DeltaWriter:
             n_dv_files=len(results),
             n_added_files=len(adds),
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def _overwrite_with_schema(
@@ -3559,7 +3560,7 @@ class DeltaWriter:
             n_removed_files=len(removes),
             n_added_files=len(adds),
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     # ---------- RESTORE ----------
@@ -3587,7 +3588,7 @@ class DeltaWriter:
             raise ValueError("RESTORE needs a version or timestamp")
         snap_now = self._snapshot
         self._assert_writable("RESTORE", removes_rows=True)
-        snap_old = Snapshot.build(self.log, version)
+        snap_old = resolve_snapshot(self.log, version)
 
         re_add = [
             f for k, f in snap_old.files.items() if k not in snap_now.files
@@ -3691,7 +3692,7 @@ class DeltaWriter:
                 attempt += 1
                 if attempt > 3:
                     raise
-                fresh = Snapshot.build(self.log, base=snap_now)
+                fresh = resolve_snapshot(self.log, base=snap_now)
                 self._revalidate_info_only_retry(snap_now, fresh, "RESTORE")
                 snap_now = fresh
                 new_version = snap_now.version + 1
@@ -3705,7 +3706,7 @@ class DeltaWriter:
             n_readded=len(re_add),
             n_removed=len(drop),
         )
-        self._snapshot = Snapshot.build(self.log, base=snap_now)
+        self._snapshot = resolve_snapshot(self.log, base=snap_now)
         return new_version
 
     def upgrade_protocol(self, min_reader: int, min_writer: int) -> int | None:
@@ -3715,7 +3716,7 @@ class DeltaWriter:
         (reader 3 / writer 7) carries every feature the legacy versions
         implied, exactly like the automatic upgrade paths. Returns the
         committed version, or None when nothing changes."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         proto = snap.protocol
         r_old = int(proto.get("minReaderVersion", 1))
         w_old = int(proto.get("minWriterVersion", 2))
@@ -3748,7 +3749,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def add_feature_support(self, feature: str) -> int | None:
@@ -3768,7 +3769,7 @@ class DeltaWriter:
             raise UnsupportedFeatureError(
                 f"cannot add support for unknown feature {feature!r}"
             )
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         proto = snap.protocol
         r, w = _legacy_features(proto)
         is_reader = feature in SUPPORTED_READER_FEATURES
@@ -3790,7 +3791,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     # ---------- ALTER TABLE SET/UNSET TBLPROPERTIES ----------
@@ -3809,7 +3810,7 @@ class DeltaWriter:
         e.g. setting ``delta.checkpointInterval`` on a version divisible
         by the interval checkpoints immediately (see
         :meth:`_maybe_auto_checkpoint`)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         config = dict(snap.configuration)
         for k, v in (updates or {}).items():
             config[str(k)] = str(v)
@@ -4039,7 +4040,7 @@ class DeltaWriter:
             actions[0]["commitInfo"]["inCommitTimestamp"] = ict_stamp
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def rename_column(self, old: str, new: str) -> int:
@@ -4066,7 +4067,7 @@ class DeltaWriter:
         streaming sink's ``mergeSchema`` option runs this once at stream
         start; batch appends get the same union inline via
         ``append(merge_schema=True)``."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         merged, cfg, changed = _merged_table_schema(snap, in_schema)
         if not changed:
             return None
@@ -4081,7 +4082,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def add_column(self, name: str, dtype, comment: str | None = None) -> int:
@@ -4092,7 +4093,7 @@ class DeltaWriter:
         field INSIDE an existing struct (``add_column("info.b", "long")``
         — end of the struct, delta-spark's default position); old files
         null-fill nested additions exactly like top-level ones."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         schema = snap.schema
         if isinstance(dtype, str):
             dtype = getattr(T, "_parse_datatype_string")(dtype)
@@ -4142,7 +4143,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def alter_column_type(self, name: str, new_type) -> int:
@@ -4155,7 +4156,7 @@ class DeltaWriter:
         ``delta.typeChanges`` metadata and upgrades the protocol to
         (3,7) + typeWidening on first use, carrying implied features.
         Dotted paths widen nested struct fields."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         if isinstance(new_type, str):
             new_type = getattr(T, "_parse_datatype_string")(new_type)
         if name.partition(".")[0] in snap.partition_columns:
@@ -4220,7 +4221,7 @@ class DeltaWriter:
             }})
         actions.append({"metaData": meta})
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def enable_variant_shredding(self) -> int:
@@ -4230,7 +4231,7 @@ class DeltaWriter:
         version bump is avoided when the feature is already present.
         The table must have a variant column (feature without one is
         meaningless and delta-spark refuses likewise)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         if not _contains_variant(snap.schema):
             raise SchemaError(
                 "enable_variant_shredding: table has no variant column")
@@ -4251,7 +4252,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def reorg_purge(self) -> int | None:
@@ -4268,7 +4269,7 @@ class DeltaWriter:
         version or None when no file carries a DV."""
         from duckdb_delta_spark.delta.scan import DeltaScanBuilder
 
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         self._assert_writable("REORG")
         dv_files = [f for f in snap.add_files() if f.deletion_vector]
         if not dv_files:
@@ -4310,7 +4311,7 @@ class DeltaWriter:
         except CommitConflictError:
             self._rollback(moved)
             raise
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     #: drop_feature support matrix: feature → (reader-relevant, guard)
@@ -4347,7 +4348,7 @@ class DeltaWriter:
         never visits the feature's historical actions (time travel to
         pre-drop versions then needs a feature-aware reader, as the spec
         warns)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         proto = snap.protocol
         r = set(proto.get("readerFeatures") or [])
         w = set(proto.get("writerFeatures") or [])
@@ -4446,7 +4447,7 @@ class DeltaWriter:
         if meta_action is not None:
             actions.append(meta_action)
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         # cut a checkpoint at the downgraded version so fresh readers
         # replay from here and never visit the feature's history
         self.checkpoint()
@@ -4471,7 +4472,7 @@ class DeltaWriter:
         generated / identity / partition columns (each already has an
         authoritative value source) and for nested paths (delta-spark:
         top-level columns only)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         if "." in name:
             raise UnsupportedFeatureError(
                 "SET DEFAULT on nested fields (top-level columns only)")
@@ -4526,7 +4527,7 @@ class DeltaWriter:
         actions.append({"metaData": meta})
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def add_constraint(self, name: str, sql_expr: str) -> int:
@@ -4542,7 +4543,7 @@ class DeltaWriter:
 
         from duckdb_delta_spark.delta.scan import DeltaScanBuilder
 
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         key = f"delta.constraints.{name.lower()}"
         if key in snap.configuration:
             raise SchemaError(f"constraint {name!r} already exists")
@@ -4591,14 +4592,14 @@ class DeltaWriter:
         actions.append({"metaData": meta})
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def drop_constraint(self, name: str, if_exists: bool = False) -> int | None:
         """ALTER TABLE DROP CONSTRAINT: removes the config key; with
         ``if_exists`` a missing constraint is a no-op returning None
         (delta-spark's IF EXISTS)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         key = f"delta.constraints.{name.lower()}"
         if key not in snap.configuration:
             if if_exists:
@@ -4614,7 +4615,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def set_cluster_by(self, cluster_by: list[str]) -> int:
@@ -4624,7 +4625,7 @@ class DeltaWriter:
         on first use. ``[]`` means CLUSTER BY NONE (the domain stays with
         an empty column list, per delta-spark). Existing files are NOT
         rewritten — the next :meth:`compact` applies the new layout."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         if snap.partition_columns and cluster_by:
             raise UnsupportedFeatureError(
                 "CLUSTER BY on a partitioned table"
@@ -4670,7 +4671,7 @@ class DeltaWriter:
         }})
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def drop_default(self, name: str) -> int:
@@ -4678,7 +4679,7 @@ class DeltaWriter:
         ``CURRENT_DEFAULT`` metadata (the feature stays listed — table
         features are never downgraded); later appends must supply the
         column again."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         schema = snap.schema
         if name not in schema.fieldNames():
             raise SchemaError(f"no such column: {name!r}")
@@ -4700,11 +4701,11 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def _alter_schema(self, op: str, target: str, new: str | None = None) -> int:
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         if snap.column_mapping_mode == "none":
             raise UnsupportedFeatureError(
                 f"{op} requires column mapping (files are keyed by "
@@ -4778,7 +4779,7 @@ class DeltaWriter:
         ]
         version = snap.version + 1
         self._commit(version, actions, snap)
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def generate_symlink_manifest(self) -> list[str]:
@@ -4793,7 +4794,7 @@ class DeltaWriter:
         applies. Stale manifests for partitions that no longer exist are
         removed; regenerate after every commit that should be visible to
         the symlink readers (or wire it into foreachBatch)."""
-        snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
+        snap = self._snapshot = resolve_snapshot(self.log, base=self._snapshot)
         files = snap.add_files()
         if any(f.deletion_vector for f in files):
             raise UnsupportedFeatureError(
@@ -5266,7 +5267,7 @@ class DeltaWriter:
                 # rewrite would resurrect its rows), or changed table
                 # metadata (our metaData/stats were built against it).
                 attempt += 1
-                fresh = Snapshot.build(self.log, base=snap)
+                fresh = resolve_snapshot(self.log, base=snap)
                 removed_paths = {r["remove"]["path"] for r in removes}
                 fresh_live = {
                     f.path for f in fresh.add_files()
@@ -5290,7 +5291,7 @@ class DeltaWriter:
             n_removed=len(removes),
             n_added=len(adds),
         )
-        self._snapshot = Snapshot.build(self.log, base=snap)
+        self._snapshot = resolve_snapshot(self.log, base=snap)
         return version
 
     def _info_only_commit(
@@ -5300,13 +5301,13 @@ class DeltaWriter:
         files or metadata, so it re-bases freely past any concurrent
         writer — the retry just takes the next version."""
         for _ in range(8):
-            snap = Snapshot.build(self.log, base=self._snapshot)
+            snap = resolve_snapshot(self.log, base=self._snapshot)
             info = _commit_info(operation, params)
             info["operationMetrics"] = dict(metrics)
             try:
                 self._commit(
                     snap.version + 1, [{"commitInfo": info}], snap)
-                self._snapshot = Snapshot.build(self.log, base=snap)
+                self._snapshot = resolve_snapshot(self.log, base=snap)
                 return snap.version + 1
             except CommitConflictError:
                 continue
@@ -5366,7 +5367,7 @@ class DeltaWriter:
         """
         from duckdb_delta_spark.delta.dv import dv_file_path
 
-        snap = Snapshot.build(self.log)
+        snap = resolve_snapshot(self.log)
         if logging is None:
             logging = snap.configuration.get(
                 "delta.vacuum.logging.enabled", "").lower() == "true"
@@ -5623,8 +5624,13 @@ class DeltaWriter:
             out.append(meta)
         out.extend(txns[k] for k in sorted(txns))
         out.extend(domains[k] for k in sorted(domains))
-        out.extend(removes[k] for k in sorted(removes))
-        out.extend(adds[k] for k in sorted(adds))
+        # a DV-less key's uniqueId is None: order it as "" so one range
+        # may hold both forms of a path (a DV delete) without a TypeError
+        def key_order(k):
+            return k[0], k[1] or ""
+
+        out.extend(removes[k] for k in sorted(removes, key=key_order))
+        out.extend(adds[k] for k in sorted(adds, key=key_order))
         path = os.path.join(
             self.log.log_path, f"{lo:020d}.{hi:020d}.compacted.json"
         )
@@ -5660,7 +5666,7 @@ class DeltaWriter:
         if not checkpoints:
             return []
         ckpt = max(checkpoints)
-        snap = Snapshot.build(self.log)
+        snap = resolve_snapshot(self.log)
         if retention_ms is None:
             retention_ms = _parse_interval_ms(
                 snap.configuration.get("delta.logRetentionDuration"),
@@ -5789,7 +5795,7 @@ class DeltaWriter:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        snap = Snapshot.build(self.log)
+        snap = resolve_snapshot(self.log)
         # a table whose checkpointPolicy is v2 must not get classic
         # checkpoints from a manual call (auto-checkpoints already honor
         # the policy; spec: the policy property governs the format)
@@ -5961,7 +5967,7 @@ class DeltaWriter:
             }},
         ]
         self._commit(snap.version + 1, actions, snap)
-        return Snapshot.build(self.log, base=snap)
+        return resolve_snapshot(self.log, base=snap)
 
     def _checkpoint_v2(
         self, v: int, rows: list[dict], max_rows_per_part: int | None

@@ -710,7 +710,9 @@ def filter_blocked_domains(
     dcol = blocklist.columns[0]
     # lit_strings: ONE py4j round-trip for the whole literal array (the
     # F.lit loop costs 2+ round-trips per domain — up to ~20k for a 10k
-    # blocklist; guide §5, driver-side plan construction)
+    # blocklist; guide §5, driver-side plan construction). A domain with
+    # a backslash has no exact SQL rendering; lit_strings then builds the
+    # array with F.lit instead of failing
     blocked_arr = lit_strings(
         [r[0] for r in blocklist.select(dcol).distinct().collect()]
     ) if blocklist.count() <= 10_000 else None

@@ -167,9 +167,9 @@ class DeltaPySource(DataSource):
         from pyspark.sql import types as T
 
         from duckdb_delta_spark.delta.log import DeltaLog
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
 
-        snap = Snapshot.build(DeltaLog(self._path))
+        snap = resolve_snapshot(DeltaLog(self._path))
         fields = list(snap.schema.fields)
         sel = self.options.get("select")
         if sel:
@@ -210,7 +210,7 @@ class DeltaPySource(DataSource):
 class DeltaStreamReader(DataSourceStreamReader):
     def __init__(self, table_path: str, schema: StructType, options):
         from duckdb_delta_spark.delta.log import DeltaLog
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
 
         self.table_path = os.path.abspath(table_path)
         self.schema = schema
@@ -336,7 +336,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         else:
             self._initial = int(start) - 1  # first batch INCLUDES this version
         # partition columns fixed at stream start
-        snap = Snapshot.build(self._log)
+        snap = resolve_snapshot(self._log)
         self._partition_columns = snap.partition_columns
         #: full table schema, kept for typing where-only columns that a
         #: select-projected stream still needs to READ for filtering
@@ -830,8 +830,10 @@ class DeltaStreamReader(DataSourceStreamReader):
         delta/changes._rows_at_big executor route)."""
         from duckdb_delta_spark.delta.snapshot import Snapshot, _dv_unique_id
 
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
+
         prev = (
-            Snapshot.build(self._log, start_v)
+            resolve_snapshot(self._log, start_v)
             if start_v >= 0
             else Snapshot(self._log, -1)
         )
@@ -1331,13 +1333,6 @@ class _WrittenFiles(WriterCommitMessage):
     rows: int = 0
 
 
-#: driver-side snapshot cache for streaming sinks, keyed by table path —
-#: deliberately MODULE level: the writer object itself is pickled to
-#: executors for write(), and a Snapshot on self would ship the whole
-#: file manifest with every task
-_SINK_SNAP_CACHE: dict = {}
-
-
 class DeltaStreamWriter(DataSourceStreamArrowWriter):
     """``writeStream.format("delta_py")`` — every micro-batch is one Delta
     commit, made EXACTLY-ONCE by the transaction-version machinery: the
@@ -1413,13 +1408,13 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         appends would corrupt or whose features it cannot honor."""
         from duckdb_delta_spark.delta.errors import UnsupportedFeatureError
         from duckdb_delta_spark.delta.log import DeltaLog
-        from duckdb_delta_spark.delta.snapshot import (
-            SUPPORTED_WRITER_FEATURES,
-            Snapshot,
-        )
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
+        from duckdb_delta_spark.delta.snapshot import SUPPORTED_WRITER_FEATURES
 
-        snap = Snapshot.build(DeltaLog(self.table_path))
-        _SINK_SNAP_CACHE[self.table_path] = snap
+        # the shared resolver keeps the snapshot driver-side (never on self:
+        # the writer object is pickled to executors for write(), and a
+        # Snapshot attribute would ship the whole file manifest per task)
+        snap = resolve_snapshot(DeltaLog(self.table_path))
         self.partition_columns = list(snap.partition_columns)
         missing = [c for c in self.partition_columns
                    if c not in self.schema.fieldNames()]
@@ -1452,8 +1447,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                 DeltaWriter(
                     self.table_path, SparkSession.getActiveSession()
                 ).merge_schema_with(self.schema)
-                snap = Snapshot.build(DeltaLog(self.table_path))
-                _SINK_SNAP_CACHE[self.table_path] = snap
+                snap = resolve_snapshot(DeltaLog(self.table_path))
                 snap_by = {f.name: f for f in snap.schema.fields}
             else:
                 raise UnsupportedFeatureError(
@@ -1854,17 +1848,18 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         _t0 = time.time()
 
         from duckdb_delta_spark.delta.log import DeltaLog
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
         from duckdb_delta_spark.delta.writer import (
             _commit_info,
             _footer_stats_many,
         )
 
         log = DeltaLog(self.table_path)
-        # incremental refresh from the cached snapshot: replays only the
-        # commits since the previous batch — a long-lived stream must not
-        # pay O(log length) driver replay per batch (O(n²) cumulative)
-        snap = Snapshot.build(log, base=_SINK_SNAP_CACHE.get(self.table_path))
+        # incremental refresh through the shared snapshot resolver: replays
+        # only the commits since the previous batch — a long-lived stream
+        # must not pay O(log length) driver replay per batch (O(n²)
+        # cumulative)
+        snap = resolve_snapshot(log)
         last = snap.transaction_version(self.app_id)
         if last is None and getattr(self, "_legacy_app_id", None):
             # opt-in upgrade path: no transaction yet under the
@@ -1881,7 +1876,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                     os.unlink(os.path.join(self.table_path, m.rel_path))
                 except OSError:
                     pass
-            _SINK_SNAP_CACHE[self.table_path] = snap
             return
         if not files:
             # empty micro-batch: an idle stream must not grow the log
@@ -1892,7 +1886,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
             # re-plans the same (empty) offset range and skips again.
             from duckdb_delta_spark.delta.logging import emit
 
-            _SINK_SNAP_CACHE[self.table_path] = snap
             emit("stream.sink.skip_empty", table_path=self.table_path,
                  batch_id=int(batchId))
             return
@@ -2004,7 +1997,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                 # of failing the whole streaming query (Spark would call
                 # abort(), unlinking this batch's files).
                 attempt += 1
-                fresh = Snapshot.build(log, base=snap)
+                fresh = resolve_snapshot(log, base=snap)
                 if attempt > 5 or fresh.metadata != snap.metadata \
                         or fresh.protocol != snap.protocol:
                     raise
@@ -2019,9 +2012,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                                 self.table_path, m.rel_path))
                         except OSError:
                             pass
-                    _SINK_SNAP_CACHE[self.table_path] = snap
                     return
-        _SINK_SNAP_CACHE[self.table_path] = snap
         from duckdb_delta_spark.delta.logging import emit
 
         emit(

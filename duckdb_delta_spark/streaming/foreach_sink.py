@@ -59,7 +59,7 @@ def delta_foreach_batch(
         import time as _time
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
         from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
@@ -69,7 +69,7 @@ def delta_foreach_batch(
                 table_path, batch_df.sparkSession)
         else:
             # refresh incrementally: other writers may have committed
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
+            w._snapshot = resolve_snapshot(w.log, base=w._snapshot)
         last = w._snapshot.transaction_version(app_id)
         if last is not None and int(batch_id) <= last:
             emit(
@@ -138,7 +138,7 @@ def delta_foreach_merge(
         from pyspark.sql import functions as F
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
         from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
@@ -147,7 +147,7 @@ def delta_foreach_merge(
             w = state["writer"] = DeltaWriter(
                 table_path, batch_df.sparkSession)
         else:
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
+            w._snapshot = resolve_snapshot(w.log, base=w._snapshot)
         last = w._snapshot.transaction_version(app_id)
         if last is not None and int(batch_id) <= last:
             emit("stream.merge.skip_replayed", table_path=table_path,
@@ -240,7 +240,7 @@ def delta_foreach_replace_where(
         import time as _time
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
+        from duckdb_delta_spark.delta.snapcache import resolve_snapshot
         from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
@@ -249,7 +249,7 @@ def delta_foreach_replace_where(
             w = state["writer"] = DeltaWriter(
                 table_path, batch_df.sparkSession)
         else:
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
+            w._snapshot = resolve_snapshot(w.log, base=w._snapshot)
         last = w._snapshot.transaction_version(app_id)
         if last is not None and int(batch_id) <= last:
             emit("stream.replace.skip_replayed", table_path=table_path,

@@ -864,3 +864,19 @@ def test_ngram_jaccard_cache_handle_releases(spark, docs, collapse):
     # releases the exposed handle (delta vs pre-call state — module
     # fixtures and earlier tests legitimately hold their own caches)
     assert cached_ids() <= before
+
+
+def test_filter_blocked_domains_backslash_entry(spark):
+    """A blocklist entry holding a backslash has no exact SQL literal:
+    the literal array falls back to F.lit instead of raising, and the
+    other entries still block."""
+    from duckdb_delta_spark.operators.text import filter_blocked_domains
+
+    docs = spark.createDataFrame(
+        [(1, "see http://bad.com/x now"), (2, "ok http://good.org/y"),
+         (3, "no urls here")], "doc_id long, text string")
+    blocklist = spark.createDataFrame(
+        [("bad.com",), ("we\\ird.org",)], "domain string")
+    got = {r["doc_id"]: r["blocked"]
+           for r in filter_blocked_domains(docs, blocklist).collect()}
+    assert got == {1: True, 2: False, 3: False}
